@@ -17,6 +17,7 @@ Scale design:
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -1204,8 +1205,9 @@ def dedup_keep_best(df: DataFrame, pairs: DataFrame, quality_col: str,
     id. Transitive closure matters — with pairwise-only resolution a
     chain a-b-c can keep both endpoints.
 
-    Scale: the cluster map is pair-graph-sized (pointer doubling,
-    O(log n) rounds — :func:`duplicate_clusters`); quality values join
+    Scale: the cluster map is pair-graph-sized (a per-partition
+    union-find seed, then pointer-doubling rounds only for components
+    that span partitions — :func:`duplicate_clusters`); quality values join
     onto cluster MEMBERS only (ids + one scalar, never text); the
     per-cluster argmax is one window over cluster_id whose partitions
     are duplicate-cluster-sized; losers return as an ids-only anti-join.
@@ -1383,6 +1385,38 @@ def drop_boilerplate_lines(df: DataFrame, id_col: str = "doc_id",
     return df.drop(text_col).join(rebuilt, id_col)
 
 
+def _local_component_minima(batches):
+    """``mapInArrow`` body of :func:`duplicate_clusters`' seed: union-find
+    over ONE partition's (id_a, id_b) rows, yielding (id, min id of the
+    id's component within this partition). The roots are always the
+    smaller id, so each root is its component's minimum, and the result
+    depends only on the SET of rows in the partition, never on their
+    order: a retried task reproduces it."""
+    import pyarrow as pa
+
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    id_type = None
+    for batch in batches:
+        id_type = batch.schema.field(0).type
+        for a, b in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    if parent:
+        ids = list(parent)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(ids, id_type), pa.array([find(x) for x in ids], id_type)],
+            ["id", "label"])
+
+
 def duplicate_clusters(pairs: DataFrame, max_iterations: int = 64,
                        checkpoint: bool = True,
                        checkpoint_dir: str | None = None,
@@ -1393,36 +1427,49 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 64,
     complements :func:`drop_near_duplicates` (greedy, non-transitive)
     when chains a-b, b-c must land in ONE cluster.
 
-    Min-label propagation WITH pointer doubling, as plain DataFrame
-    joins. Each round every node (1) takes min(own label, neighbors'
-    labels), then (2) shortcuts through its label's label
+    Two phases. (1) A per-partition union-find SEED: one ``mapInArrow``
+    pass over the pair frame's existing partitions (ids only, no
+    shuffle) gives every node the minimum of its component WITHIN that
+    partition; a ``groupBy(id)`` keeps the smallest and flags the nodes
+    whose partitions disagree. If no node is flagged, the seed is the
+    answer: agreement at every node makes the label constant along
+    every edge, hence over each component, and a component's minimum is
+    its own local root, so that constant is the component minimum — the
+    function returns after ZERO rounds. (2) Only when a component spans
+    partitions (``split_nodes > 0``) does min-label propagation WITH
+    pointer doubling run, as plain DataFrame joins, starting from the
+    seed. Each round every node (a) takes min(own label, neighbors'
+    labels), then (b) shortcuts through its label's label
     (``l(u) <- l(l(u))``, the pointer-jumping half of
-    large-star/small-star connected components). Labels are ids from the
-    same component and only ever decrease, and ``l(x) <= x`` holds
-    throughout, so the jump is safe; with it the frontier a label has
+    large-star/small-star connected components). Seed labels are ids
+    from the same component with ``l(x) <= x``, and rounds only ever
+    lower them, so the jump is safe; with it the frontier a label has
     traveled roughly doubles per round, making rounds-to-fixpoint
-    O(log n) in the component size rather than O(diameter) — a 100 TB
-    boilerplate chain of length d closes in ~log2(d) rounds, not d.
-    Stops at the fixpoint (no label changed); **raises RuntimeError** if
+    O(log n) in the span of the split rather than O(diameter). Stops at
+    the fixpoint (no label changed); **raises RuntimeError** if
     ``max_iterations`` rounds pass without convergence — partial labels
     are wrong answers and are never returned silently. Only ids
     appearing in pairs are emitted (singletons are trivially their own
-    cluster).
+    cluster); a pair with a NULL endpoint links nothing.
 
-    Scale: per-round cost is two id-only joins (the neighbor-min over
-    the self-looped PAIR graph — the self-loops fold the "own label"
-    term into the same join — and the pointer-jump label self-join) —
-    orders of magnitude smaller than the corpus.
-    Lineage is truncated each round (eager, so the convergence count
-    reuses it): ``localCheckpoint`` by default, or a RELIABLE checkpoint
-    when ``checkpoint_dir`` is set (or MEP_SPARK_CHECKPOINT_DIR is
-    exported) — executor-local blocks die with an executor, and at
-    cluster scale an 8-round job must survive a lost node, so reliable
-    mode is the right default off this machine (see checkpointing.py).
-    The fixpoint is unique, so iteration order never changes the result.
+    Scale: the seed is one Python pass over each partition's id pairs
+    plus one id-keyed shuffle and one aggregate (row count, flagged
+    nodes and label sum together). Per round the loop costs two id-only
+    joins (the neighbor-min over the self-looped PAIR graph — the
+    self-loops fold the "own label" term into the same join — and the
+    pointer-jump label self-join) — orders of magnitude smaller than the
+    corpus. Lineage is truncated at the seed and at each round (the
+    step's aggregate computes it once): ``localCheckpoint`` by default,
+    or a RELIABLE checkpoint when ``checkpoint_dir`` is set (or
+    MEP_SPARK_CHECKPOINT_DIR is exported) — executor-local blocks die
+    with an executor, and at cluster scale an 8-round job must survive a
+    lost node, so reliable mode is the right default on a real cluster
+    (see checkpointing.py). The fixpoint is unique, so neither the
+    partition layout nor the iteration order changes the result.
 
     ``stats``, when passed a dict, receives ``{"iterations": n,
-    "converged": True}`` for observability/tests.
+    "converged": True, "split_nodes": k}`` for observability/tests,
+    where ``k`` is the number of nodes the loop had to reconcile.
 
     ``checkpoint=False`` is TEST-ONLY (tiny graphs): without per-round
     materialization the convergence aggregate recomputes the full,
@@ -1452,47 +1499,78 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 64,
             f"{sorted(_bad)}); hash non-numeric ids to longs (e.g. "
             "xxhash64) before pairing — the sum-based convergence "
             "check is only exact over integers")
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).union(
-        pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-    )
+
+    def truncate(df: DataFrame) -> DataFrame:
+        if checkpoint and not _reliable:
+            # LAZY localCheckpoint (r12): the aggregate that follows is
+            # the step's only action, so it both computes the step AND
+            # materializes the truncated blocks — ONE job where
+            # eager-checkpoint-then-count ran two; the agg computes every
+            # partition, so the checkpoint needs no fill-in pass.
+            return df.localCheckpoint(eager=False)
+        if checkpoint:
+            # reliable mode keeps the eager persist+checkpoint dance
+            # (see materialize: a bare lazy .checkpoint() would
+            # compute the step twice under a reliable dir)
+            return materialize(df, checkpoint_dir)
+        return df
+
+    # labels only ever DECREASE, so their exact sum is a monotone
+    # convergence witness: sum unchanged between rounds ⟺ no label
+    # changed (every term can only fall). Summing as decimal(38,0) keeps
+    # it exact — n·2^63 ≈ 10^31 even at 10^12 nodes — and try_sum turns
+    # an overflow (ids near 10^37) into NULL in ANSI mode too, which is
+    # raised on below, never read as convergence.
+    label_sum = F.try_sum(F.col("label").cast("decimal(38,0)"))
+
+    # one common id type for both endpoints (e.g. int beside bigint)
+    id_type = (pairs.select(F.col("id_a").alias("id"))
+               .union(pairs.select(F.col("id_b").alias("id")))
+               .schema["id"].dataType)
+    ids = pairs.select(F.col("id_a").cast(id_type), F.col("id_b").cast(id_type)).dropna()
     if checkpoint:
-        # without this, every round's join re-evaluates the FULL upstream
-        # pair lineage (e.g. the whole MinHash-LSH subtree) — the loop is
-        # only "joins on the pair graph" if the graph is materialized.
-        # Materialize BEFORE deriving nodes/self-loops: both read edges,
-        # and unmaterialized they would each re-run the pair subtree.
-        edges = materialize(edges, checkpoint_dir)
-    nodes = edges.select(F.col("src").alias("id")).distinct()
-    if checkpoint:
-        # consumed every round (self-loop branch of the graph join) and
-        # once for the label init — one tiny distinct, computed once
-        nodes = materialize(nodes, checkpoint_dir)
-    # self-loop edges (r12): appending (id, id) for every node folds the
-    # "min(own label, neighbors' labels)" combine into the SAME
-    # neighbor-min join — each round is ONE graph join + the pointer
-    # jump, where the old shape ran nbr-join, a labels⨝nbr combine join,
-    # then the jump (three joins). The self-loop guarantees every node
-    # survives the inner join/groupBy with at least its own label.
-    edges = edges.union(
-        nodes.select(F.col("id").alias("src"), F.col("id").alias("dst"))
-    )
-    labels = nodes.withColumn("label", F.col("id"))
-    converged = False
+        # the seed's job fills this; the loop's edge frame, when a
+        # component spans partitions, re-reads it instead of re-running
+        # the upstream pair lineage (e.g. the whole MinHash-LSH subtree)
+        ids = ids.persist(StorageLevel.MEMORY_AND_DISK)
+    t = id_type.simpleString()
+    try:
+        seed = truncate(
+            ids.mapInArrow(_local_component_minima, f"id {t}, label {t}")
+            .groupBy("id")
+            .agg(F.min("label").alias("label"),
+                 (F.min("label") != F.max("label")).cast("long").alias("__split"))
+        )
+        # ONE aggregate decides emptiness (explicit row count, never a
+        # NULL sum), the fixpoint (no flagged node) and seeds the witness
+        n_nodes, split_nodes, prev_sum = seed.agg(
+            F.count(F.lit(1)), F.sum("__split"), label_sum).collect()[0]
+        split_nodes = split_nodes or 0
+        if split_nodes and prev_sum is None:
+            raise RuntimeError(
+                "duplicate_clusters: seed label sum overflowed on a "
+                f"nonempty graph ({n_nodes} nodes, {split_nodes} split) — "
+                "the convergence witness is unavailable; labels would be "
+                "unreliable")
+        if split_nodes:
+            edges = ids.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+            edges = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+            if checkpoint:
+                edges = materialize(edges, checkpoint_dir)
+    finally:
+        # read by the seed and, when it is built, the (materialized) edges
+        ids.unpersist()
+    labels = seed.select("id", "label")
+    if split_nodes:
+        # self-loop edges (r12): appending (id, id) for every node folds
+        # the "min(own label, neighbors' labels)" combine into the SAME
+        # neighbor-min join — each round is ONE graph join + the pointer
+        # jump. The self-loop guarantees every node survives the inner
+        # join/groupBy with at least its own label.
+        edges = edges.union(labels.select(F.col("id").alias("src"), F.col("id").alias("dst")))
+    converged = not split_nodes
     rounds = 0
-    # Seed the convergence witness with the INITIAL label sum (labels
-    # start as the node ids), computed over the just-materialized node
-    # set — one tiny aggregate. This (a) detects an already-at-fixpoint
-    # graph in round 1 (prev_sum=None could not, so max_iterations=1 on
-    # converged input raised — ADVICE r12), and (b) distinguishes the
-    # empty graph (sum over zero rows is NULL → trivially converged,
-    # skip the loop) from an arithmetic failure mid-loop, which now
-    # raises instead of silently mapping to converged=True.
-    prev_sum = nodes.agg(
-        F.sum(F.col("id").cast("decimal(38,0)"))).collect()[0][0]
-    if prev_sum is None:
-        converged = True  # empty pair graph: nothing to propagate
-        max_iterations = 0
-    for _ in range(max_iterations):
+    while not converged and rounds < max_iterations:
         rounds += 1
         propagated = (
             edges.join(labels, edges["dst"] == labels["id"])
@@ -1506,7 +1584,7 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 64,
         jump = propagated.select(
             F.col("id").alias("__jid"), F.col("label").alias("__jlabel")
         )
-        stepped = (
+        labels = truncate(
             propagated.join(jump, propagated["label"] == jump["__jid"], "left")
             .select(
                 propagated["id"],
@@ -1516,45 +1594,22 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 64,
                 ).alias("label"),
             )
         )
-        if checkpoint and not _reliable:
-            # LAZY localCheckpoint (r12): the convergence aggregate below
-            # is the round's only action, so it both computes the round
-            # AND materializes the truncated blocks — ONE job per round
-            # where eager-checkpoint-then-count ran two; the agg computes
-            # every partition, so the checkpoint needs no fill-in pass.
-            stepped = stepped.localCheckpoint(eager=False)
-        elif checkpoint:
-            # reliable mode keeps the eager persist+checkpoint dance
-            # (see materialize: a bare lazy .checkpoint() would
-            # compute the round twice under a reliable dir)
-            stepped = materialize(stepped, checkpoint_dir)
-        # labels only ever DECREASE, so their exact sum is a monotone
-        # convergence witness: sum unchanged between rounds ⟺ no label
-        # changed (every term can only fall). Summing as decimal(38,0)
-        # keeps it exact — n·2^63 ≈ 10^31 even at 10^12 nodes, far
-        # inside 38 digits — and spares the per-row __old carry + filter
-        # the old changed-count check needed.
-        cur_sum = stepped.agg(
-            F.sum(F.col("label").cast("decimal(38,0)"))
-        ).collect()[0][0]
-        labels = stepped
+        cur_sum = labels.agg(label_sum).collect()[0][0]
         if cur_sum is None:
-            # the graph was nonempty at entry (the seed sum above was
-            # non-NULL), so a NULL sum here is an arithmetic failure
-            # (e.g. decimal overflow under non-ANSI mode), never "zero
-            # rows" — treating it as convergence would silently return
-            # half-propagated labels (ADVICE r12)
+            # the seed sum was non-NULL and labels only fall, so a NULL
+            # here is an arithmetic failure, never "zero rows" — treating
+            # it as convergence would silently return half-propagated
+            # labels (ADVICE r12)
             raise RuntimeError(
                 "duplicate_clusters: label sum came back NULL on a "
                 "nonempty graph — arithmetic failure in the convergence "
                 "aggregate; labels would be unreliable")
-        if cur_sum == prev_sum:
-            converged = True
-            break
+        converged = cur_sum == prev_sum
         prev_sum = cur_sum
     if stats is not None:
         stats["iterations"] = rounds
         stats["converged"] = converged
+        stats["split_nodes"] = split_nodes
     if not converged:
         raise RuntimeError(
             f"duplicate_clusters: no fixpoint after {max_iterations} rounds; "

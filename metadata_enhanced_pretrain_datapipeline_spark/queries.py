@@ -1431,8 +1431,9 @@ def q_minhash_pairs_portable(spark, sf):
 )
 def q_duplicate_clusters(spark, sf):
     """Extension — transitive near-duplicate clusters (connected
-    components) over the portable MinHash-LSH pair set, via min-label
-    propagation with pointer doubling — O(log n) rounds
+    components) over the portable MinHash-LSH pair set: a per-partition
+    union-find seed, then min-label propagation with pointer doubling —
+    O(log n) rounds — only for components that span partitions
     (operators/dedup.duplicate_clusters). The
     DuckDB oracle computes the exact transitive closure with a recursive
     CTE, so every chain a-b-c must collapse to one cluster id."""
@@ -5689,8 +5690,10 @@ def q_hf_classifier_oracle(spark, sf):
 def q_leakage_safe_split(spark, sf):
     """Extension — leakage-safe train/val/test split
     (operators/sampling.leakage_safe_split): the split unit is the
-    transitive near-duplicate CLUSTER (pointer-doubling components over
-    the portable MinHash pair set), so an eval document's near-twin can
+    transitive near-duplicate CLUSTER (connected components of the
+    portable MinHash pair set: a per-partition union-find seed, with
+    pointer-doubling rounds for components that span partitions), so an
+    eval document's near-twin can
     never land in train. The oracle recomputes the exact transitive
     closure (recursive CTE) and replays the integer-threshold hash
     assignment, hash-checking every document's split."""
@@ -6456,7 +6459,7 @@ def q_simhash_dedup(spark, sf):
 def q_dedup_keep_best(spark, sf):
     """Quality-aware duplicate resolution (dedup.dedup_keep_best): the
     portable MinHash-LSH pair set resolves into TRANSITIVE clusters
-    (pointer doubling) and each cluster keeps its highest-n_chars member
+    (dedup.duplicate_clusters) and each cluster keeps its highest-n_chars member
     (tie -> smaller id) instead of smallest-id-wins — the resolution a
     quality-scored production pipeline wants. The oracle recomputes the
     exact closure with a recursive CTE and replays the per-cluster

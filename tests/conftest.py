@@ -34,3 +34,15 @@ def docs(spark):
             text = "identical duplicate body"
         rows.append((i, text, ["en", "de", "fr"][i % 3], f"src{i % 4}"))
     return spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
+
+
+@pytest.fixture(scope="session")
+def round_robin(spark):
+    """``round_robin(rows, n, schema)``: a DataFrame whose row j sits in
+    partition j % n — an explicit layout, unlike ``createDataFrame``'s
+    slicing or ``repartition(n)``'s hash-sorted round robin."""
+    def layout(rows, n, schema="id_a long, id_b long"):
+        rdd = (spark.sparkContext.parallelize(list(enumerate(rows)), n)
+               .partitionBy(n, lambda j: j % n).values())
+        return spark.createDataFrame(rdd, schema)
+    return layout

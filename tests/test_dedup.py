@@ -244,12 +244,62 @@ def test_duplicate_clusters_pointer_doubling_log_rounds(spark):
     assert stats["iterations"] <= 10
 
 
-def test_duplicate_clusters_raises_when_unconverged(spark):
+def test_duplicate_clusters_raises_when_unconverged(spark, round_robin):
+    # a 40-edge path dealt round-robin over 4 partitions: no partition
+    # holds two adjacent edges, so the per-partition seed links only edge
+    # endpoints and one round cannot reach the fixpoint
     import pytest
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(40)], "id_a long, id_b long")
+    pairs = round_robin([(i, i + 1) for i in range(40)], 4)
     with pytest.raises(RuntimeError, match="no fixpoint after 1 rounds"):
         dedup.duplicate_clusters(pairs, max_iterations=1)
+
+
+def test_duplicate_clusters_reconciles_split_components(spark, round_robin):
+    # the same round-robin path: every interior node sees two different
+    # local minima, so 39 nodes are split and the loop reconciles them
+    pairs = round_robin([(i, i + 1) for i in range(40)], 4)
+    stats = {}
+    got = {r.doc_id: r.cluster_id
+           for r in dedup.duplicate_clusters(pairs, stats=stats).collect()}
+    assert got == {i: 0 for i in range(41)}
+    assert stats["split_nodes"] == 39
+    assert stats["converged"] is True and 1 <= stats["iterations"] <= 6
+
+
+def test_duplicate_clusters_one_partition_needs_no_rounds(spark):
+    # a 200-node path in ONE partition: the per-partition union-find
+    # seed already holds every component minimum — zero rounds
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(199)], "id_a long, id_b long").coalesce(1)
+    stats = {}
+    got = {r.doc_id: r.cluster_id
+           for r in dedup.duplicate_clusters(pairs, stats=stats).collect()}
+    assert got == {i: 0 for i in range(200)}
+    assert stats == {"iterations": 0, "converged": True, "split_nodes": 0}
+
+
+def test_duplicate_clusters_decimal_ids_near_overflow(spark, round_robin):
+    # decimal(38,0) ids near 10^37: 41 of them sum past 38 digits, so the
+    # convergence witness overflows. Never wrong clusters: the seed alone
+    # answers a layout whose components sit in one partition each, and a
+    # layout that needs the loop raises instead of converging falsely.
+    from decimal import Decimal
+
+    import pytest
+    base = 10 ** 37
+    rows = [(Decimal(base + 2 * i), Decimal(base + 2 * i + 1)) for i in range(25)]
+    want = {Decimal(base + 2 * i + j): Decimal(base + 2 * i)
+            for i in range(25) for j in (0, 1)}
+    schema = "id_a decimal(38,0), id_b decimal(38,0)"
+    stats = {}
+    got = {r.doc_id: r.cluster_id
+           for r in dedup.duplicate_clusters(
+               round_robin(rows, 4, schema), stats=stats).collect()}
+    assert got == want and stats["iterations"] == 0
+
+    chain = [(Decimal(base + i), Decimal(base + i + 1)) for i in range(40)]
+    with pytest.raises(RuntimeError, match="overflowed"):
+        dedup.duplicate_clusters(round_robin(chain, 4, schema))
 
 
 def test_duplicate_clusters_rejects_non_integral_ids(spark):
@@ -275,8 +325,8 @@ def test_duplicate_clusters_empty_graph(spark):
 
 def test_duplicate_clusters_fixpoint_detected_in_one_round(spark):
     # a graph already at fixpoint (only self-pairs) must converge with
-    # max_iterations=1: the witness is seeded with the initial label sum
-    # (ADVICE r12 — prev_sum=None used to force a second round)
+    # max_iterations=1 (ADVICE r12): the union-find seed proves it in
+    # zero rounds
     stats = {}
     got = {r.doc_id: r.cluster_id
            for r in dedup.duplicate_clusters(
@@ -284,7 +334,7 @@ def test_duplicate_clusters_fixpoint_detected_in_one_round(spark):
                                      "id_a long, id_b long"),
                max_iterations=1, stats=stats).collect()}
     assert got == {5: 5, 9: 9}
-    assert stats["converged"] is True and stats["iterations"] == 1
+    assert stats["converged"] is True and stats["iterations"] == 0
 
 
 def test_excise_repeated_ngrams_kills_shared_span(spark):
@@ -590,30 +640,33 @@ def test_band_store_layout_and_pruned_probe(spark, tmp_path):
     assert got == expect and got  # non-empty: every doc emits band 2
 
 
-def test_duplicate_clusters_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir flips the per-round lineage truncation to a
-    RELIABLE checkpoint (VERDICT r5 #4): same fixpoint as the
-    localCheckpoint default, and the checkpoint blocks actually land in
-    the given directory (an executor loss re-reads them from the
-    filesystem instead of killing the iterative job)."""
+def test_duplicate_clusters_reliable_checkpoint(spark, tmp_path, round_robin):
+    """checkpoint_dir flips the seed's and every round's lineage
+    truncation to a RELIABLE checkpoint (VERDICT r5 #4): same fixpoint as
+    the localCheckpoint default, and the checkpoint blocks actually land
+    in the given directory (an executor loss re-reads them from the
+    filesystem instead of killing the iterative job) — also when the
+    seed alone answers and zero rounds run."""
     import os
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22)],
-        "id_a long, id_b long",
-    )
-    ckdir = str(tmp_path / "ck")
-    stats: dict = {}
-    got = {(r.doc_id, r.cluster_id)
-           for r in dedup.duplicate_clusters(
-               pairs, checkpoint_dir=ckdir, stats=stats).collect()}
+    rows = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22)]
     expect = {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10),
               (20, 20), (21, 20), (22, 20)}
-    assert got == expect
-    assert stats["converged"]
-    # reliable blocks on disk, not executor memory
-    written = [f for _, _, fs in os.walk(ckdir) for f in fs]
-    assert written, "no checkpoint blocks written to checkpoint_dir"
+    # one partition: the seed alone answers; one pair per partition:
+    # the chains are split and the loop runs
+    for n in (1, 6):
+        ckdir = str(tmp_path / f"ck{n}")
+        stats: dict = {}
+        got = {(r.doc_id, r.cluster_id)
+               for r in dedup.duplicate_clusters(
+                   round_robin(rows, n), checkpoint_dir=ckdir,
+                   stats=stats).collect()}
+        assert got == expect
+        assert stats["converged"]
+        assert (stats["iterations"] > 0) == (n > 1)
+        # reliable blocks on disk, not executor memory
+        written = [f for _, _, fs in os.walk(ckdir) for f in fs]
+        assert written, "no checkpoint blocks written to checkpoint_dir"
 
 
 def test_materialize_env_var_switch(spark, tmp_path, monkeypatch):
